@@ -21,6 +21,18 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 RUN_SLOW = os.environ.get("SPARK_GRAFT_FULL_TESTS", "") not in ("", "0")
 
 
+def _named_by_node_id(config, item) -> bool:
+    """True when a `path::name` argument on the command line names item
+    (or its class, or all of its parametrizations)."""
+    for arg in config.args:
+        path, sep, name = arg.partition("::")
+        if sep and os.path.abspath(path) == str(item.path):
+            own = item.nodeid.partition("::")[2]
+            if own == name or own.startswith((name + "::", name + "[")):
+                return True
+    return False
+
+
 def pytest_collection_modifyitems(config, items):
     if RUN_SLOW or config.getoption("-m", default=""):
         # an explicit -m expression (e.g. `-m slow`) takes over selection
@@ -29,7 +41,7 @@ def pytest_collection_modifyitems(config, items):
         reason="slow tier: set SPARK_GRAFT_FULL_TESTS=1 to run"
     )
     for item in items:
-        if "slow" in item.keywords:
+        if "slow" in item.keywords and not _named_by_node_id(config, item):
             item.add_marker(skip)
 
 

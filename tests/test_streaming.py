@@ -250,6 +250,35 @@ def test_rate_logging_listener_captures_progress(spark, tmp_path, drops_dir):
         spark.streams.removeListener(listener)
 
 
+def test_in_memory_logs_stay_at_their_cap():
+    """A long-running stream must not hold growing logs: past the cap,
+    the listener's progress and the JDBC sink's attempts keep only the
+    newest entries."""
+    from types import SimpleNamespace
+
+    from transitlog_hfp_sink_spark.sinks.jdbc import (
+        ATTEMPTS_LOG_MAXLEN,
+        JdbcVehiclesSink,
+    )
+    from transitlog_hfp_sink_spark.streaming import RateLoggingListener
+    from transitlog_hfp_sink_spark.streaming.pipeline import PROGRESS_LOG_MAXLEN
+
+    listener = RateLoggingListener()
+    for b in range(PROGRESS_LOG_MAXLEN + 5):
+        listener.onQueryProgress(SimpleNamespace(progress=SimpleNamespace(
+            batchId=b, numInputRows=1, inputRowsPerSecond=1.0,
+            processedRowsPerSecond=1.0)))
+    assert len(listener.progress) == PROGRESS_LOG_MAXLEN
+    assert listener.progress[-1]["batchId"] == PROGRESS_LOG_MAXLEN + 4
+
+    sink = JdbcVehiclesSink(url="jdbc:postgresql://db/hfp")
+    sink._write_once = lambda df: None
+    for b in range(ATTEMPTS_LOG_MAXLEN + 5):
+        sink(SimpleNamespace(), batch_id=b)
+    assert len(sink.attempts_log) == ATTEMPTS_LOG_MAXLEN
+    assert sink.attempts_log[-1] == (ATTEMPTS_LOG_MAXLEN + 4, 1, True)
+
+
 def test_cross_batch_dedup_within_watermark(spark, tmp_path):
     """At-least-once -> effectively-once across micro-batches: a replayed
     row in a LATER batch is dropped by dropDuplicatesWithinWatermark

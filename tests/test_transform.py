@@ -46,8 +46,13 @@ def test_output_types_match_ddl(vehicles):
 
 
 def test_split_accounts_for_every_row(spark, raw_df, vehicles):
-    valid, dead = hfp_split(raw_df)
-    assert valid.count() + dead.count() == raw_df.count()
+    # a row whose schema_valid is NULL counts as invalid, not as neither side
+    unflagged = raw_df.where(F.col("schema_valid")).limit(1).withColumn(
+        "schema_valid", F.lit(None).cast("boolean")
+    )
+    raw = raw_df.unionByName(unflagged)
+    valid, dead = hfp_split(raw)
+    assert valid.count() + dead.count() == raw.count()
     reasons = {r["reject_reason"] for r in dead.select("reject_reason").distinct().collect()}
     assert reasons == {"invalid_protobuf_schema", "unparseable_tst"}
 
@@ -190,3 +195,48 @@ def test_json_decode_roundtrip(spark, raw_df):
     garbage = spark.createDataFrame([("{not json",), ("",)], "value string")
     dec = decode_hfp_json(garbage)
     assert dec.where(F.col("schema_valid")).count() == 0
+
+
+def test_json_file_paths_account_for_every_line(spark, tmp_path):
+    """One JSON file, four lines: a good message, a bad tst, a garbage
+    line, and a message without schema_valid/payload. The batch reader,
+    the stream reader and decode_hfp_json must agree, and every line must
+    land on exactly one side of the split."""
+    import json
+
+    from transitlog_hfp_sink_spark.sources.decode import decode_hfp_json
+    from transitlog_hfp_sink_spark.sources.files import read_hfp_batch, read_hfp_stream
+
+    topic = {"received_at": 1_704_103_200_000, "unique_vehicle_id": "0012/00034",
+             "event_type": "VP", "journey_type": "journey"}
+    good = {"schema_valid": True, "topic": topic,
+            "payload": {"tst": "2024-01-01T10:00:00.000Z", "oper": 12, "veh": 34}}
+    bad_tst = {**good, "payload": {**good["payload"], "tst": "not-a-timestamp"}}
+    lines = [json.dumps(good), json.dumps(bad_tst), "}{ not json", json.dumps({"topic": topic})]
+    src = tmp_path / "json"
+    src.mkdir()
+    (src / "hfp.json").write_text("\n".join(lines) + "\n")
+
+    def sides(raw):
+        valid, dead = hfp_split(raw)
+        return (sorted(valid.collect()),
+                dict(dead.groupBy("reject_reason").count().collect()))
+
+    streamed = []
+    (
+        read_hfp_stream(spark, str(src), fmt="json").writeStream
+        .foreachBatch(lambda df, _: streamed.append(sides(df)))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start().awaitTermination()
+    )
+    assert len(streamed) == 1
+    results = {
+        "batch": sides(read_hfp_batch(spark, str(src), fmt="json")),
+        "stream": streamed[0],
+        "decode": sides(decode_hfp_json(spark.read.text(str(src)))),
+    }
+    for name, (valid, dead) in results.items():
+        assert len(valid) + sum(dead.values()) == len(lines), name
+        assert dead == {"invalid_protobuf_schema": 2, "unparseable_tst": 1}, name
+        assert valid == results["decode"][0], name
+    assert [r["unique_vehicle_id"] for r in results["decode"][0]] == ["0012/00034"]

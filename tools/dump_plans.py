@@ -1,12 +1,13 @@
-"""Dump `.explain("formatted")` for every benched query to plans/r12/.
+"""Dump `.explain("formatted")` for every benched query into a directory.
 
-Usage: python tools/dump_plans_r11.py <suffix> [query ...]
+Usage: python tools/dump_plans.py <out_dir> [suffix] [query ...]
 
-Writes plans/r12/<query>_<suffix>.txt (suffix = before|after) for every
-headline bench query plus the TPC-H tail shapes — the optimization-round
-evidence files. Queries whose registry callable executes side work on
-construction are substituted the same way tools/gen_plans.py does, so the
-snapshot is the steady-state plan the bench times.
+Writes <out_dir>/<query>_<suffix>.txt (e.g. out_dir = plans/r12; suffix =
+before|after, default before) for every headline bench query plus the
+TPC-H tail shapes — the optimization-round evidence files. Queries whose
+registry callable executes side work on construction are substituted the
+same way tools/gen_plans.py does, so the snapshot is the steady-state plan
+the bench times.
 """
 import os
 import sys
@@ -17,14 +18,15 @@ from transitlog_hfp_sink_spark.session import build_session
 from transitlog_hfp_sink_spark.plans.inspect import explain_str
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "plans", "r12")
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
-    os.makedirs(OUT, exist_ok=True)
+    if len(sys.argv) < 2:
+        raise SystemExit(__doc__)
+    out = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    only = set(sys.argv[3:])
+    os.makedirs(out, exist_ok=True)
 
     from bench import BENCH_QUERIES, bench_overrides
     from transitlog_hfp_sink_spark.queries import queries, power, relational
@@ -50,7 +52,7 @@ def main() -> None:
     }
 
     spark = build_session(
-        app_name="dump-plans-r11", master="local[4]", shuffle_partitions=4,
+        app_name="dump-plans", master="local[4]", shuffle_partitions=4,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     failed = []
@@ -66,7 +68,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 — record and keep dumping
             failed.append((name, repr(e)[:200]))
             continue
-        with open(os.path.join(OUT, f"{name}_{suffix}.txt"), "w") as f:
+        with open(os.path.join(out, f"{name}_{suffix}.txt"), "w") as f:
             f.write(plan)
         print(name, flush=True)
     spark.stop()

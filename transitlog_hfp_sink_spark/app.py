@@ -219,19 +219,14 @@ def _backfill(argv: list[str]) -> int:
     p.add_argument("--sink-path", required=True, help="partitioned vehicles store")
     p.add_argument("--dead-letter", default=None)
     args = p.parse_args(argv)
-    from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA, PARTITION_COLUMNS
+    from transitlog_hfp_sink_spark.schema import PARTITION_COLUMNS, VEHICLES_DEDUP_KEY
     from transitlog_hfp_sink_spark.sinks.merge import upsert_partitioned
+    from transitlog_hfp_sink_spark.sources.files import read_hfp_batch
     from transitlog_hfp_sink_spark.transform import hfp_split, with_partition_columns
 
     spark = build_session(app_name="hfp-backfill")
     try:
-        reader = spark.read.schema(HFP_RAW_SCHEMA)
-        raw = (
-            reader.parquet(args.source)
-            if args.source_format == "parquet"
-            else reader.json(args.source)
-        )
-        valid, dead = hfp_split(raw)
+        valid, dead = hfp_split(read_hfp_batch(spark, args.source, fmt=args.source_format))
         if args.dead_letter:
             dead.write.mode("append").parquet(args.dead_letter)
         updates = with_partition_columns(valid)
@@ -242,7 +237,7 @@ def _backfill(argv: list[str]) -> int:
             spark,
             args.sink_path,
             updates,
-            key_cols=["unique_vehicle_id", "tst", "event_type", "journey_type"],
+            key_cols=list(VEHICLES_DEDUP_KEY),
             partition_cols=list(PARTITION_COLUMNS),
             count_rows=True,
         )

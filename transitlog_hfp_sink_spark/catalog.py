@@ -246,8 +246,8 @@ def register_latest_view(spark: SparkSession) -> None:
     per vehicle, the merge keeps the later), so the query is ONE
     hash-agg pass at any scale, never a window sort.
 
-    Ties on tst: the dedup view's natural key is (unique_vehicle_id,
-    tst, event_type, journey_type) — transform.py:dedup_vehicles — so a
+    Ties on tst: the dedup view's natural key is
+    ``schema.VEHICLES_DEDUP_KEY`` (transform.py:dedup_vehicles), so a
     vehicle may legally hold several rows at one tst (different event
     type, or journey vs deadrun). The max_by ordering key packs the FULL
     remaining natural key, ``struct(tst, event_type, journey_type)``, so

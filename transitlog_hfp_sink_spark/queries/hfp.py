@@ -15,8 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transitlog_hfp_sink_spark.functions.units import dec_units, units_double
+from transitlog_hfp_sink_spark.schema import VEHICLES_DEDUP_KEY
 from transitlog_hfp_sink_spark.sources.files import read_table
-from transitlog_hfp_sink_spark.transform import hfp_flatten
+from transitlog_hfp_sink_spark.transform import hfp_transform
 
 JOURNEY = ["journey", "deadrun", "signoff"]
 EVENT18 = [
@@ -167,9 +168,7 @@ def synth_vehicles(
     cached = _SYNTH_CACHE.get(key)
     if cached is not None:
         return cached
-    raw = synth_hfp(read_table(spark, sf_dir, "events", widen=widen))
-    flat = hfp_flatten(raw.where(F.col("schema_valid")))
-    out = flat.where(F.col("tst").isNotNull())
+    out = hfp_transform(synth_hfp(read_table(spark, sf_dir, "events", widen=widen)))
     if any(k[: len(prefix)] != prefix for k in _SYNTH_CACHE):
         _SYNTH_CACHE.clear()  # one live session/SF at a time; no unbounded growth
     _SYNTH_CACHE[key] = out
@@ -296,9 +295,7 @@ def q_hfp_protobuf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw = synth_hfp(read_table(spark, sf_dir, "events"))
     wire = encode_hfp_wire(raw)
-    decoded = decode_hfp_wire(wire)
-    flat = hfp_flatten(decoded.where(F.col("schema_valid")))
-    return flat.where(F.col("tst").isNotNull())
+    return hfp_transform(decode_hfp_wire(wire))
 
 
 def q_hfp_vp_per_route(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -353,9 +350,7 @@ def q_hfp_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry (split in round 5 so the driver localizes which leg diverges)."""
     v = synth_vehicles(spark, sf_dir)
     replay = v.unionAll(v)
-    keys = replay.select(
-        "unique_vehicle_id", "tst", "event_type", "journey_type"
-    ).distinct()
+    keys = replay.select(*VEHICLES_DEDUP_KEY).distinct()
     term = _digest32(
         F.col("unique_vehicle_id"),
         F.date_format("tst", "yyyy-MM-dd HH:mm:ss"),
@@ -663,7 +658,7 @@ SELECT journey_type AS key, count(*) AS n_unique,
              unique_vehicle_id, strftime(tst, '%Y-%m-%d %H:%M:%S'),
              event_type)), 1, 8))::BIGINT) AS BIGINT) AS digest
 FROM (
-  SELECT DISTINCT unique_vehicle_id, tst, event_type, journey_type FROM (
+  SELECT DISTINCT {', '.join(VEHICLES_DEDUP_KEY)} FROM (
     SELECT * FROM hfp_vehicles UNION ALL SELECT * FROM hfp_vehicles
   )
 ) GROUP BY journey_type

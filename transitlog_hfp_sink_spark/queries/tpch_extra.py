@@ -57,10 +57,6 @@ def _one():
     return F.lit(1).cast("decimal(18,2)")
 
 
-def _disc_price():
-    return _dec("l_extendedprice") * (_one() - _dec("l_discount"))
-
-
 # --------------------------------------------------------------------------
 # q6: forecast revenue change — single-table filter + scalar agg.
 # Predicates (shipdate range, discount band, quantity cap) all push to the

@@ -5,17 +5,23 @@ MessageProcessor.java:118-119, QueueWriter.java:60,97). On Spark the
 decode is a column expression:
 
 - JSON path (fully implemented): `from_json` against the canonical nested
-  schema — used by tests/dev and any JSON-carrying topic.
+  schema — the one JSON decoder: JSON fixture files (sources/files.py) and
+  any JSON-carrying topic both go through `decode_hfp_json`.
 - Protobuf path: `from_protobuf` (spark-protobuf module) against the
   compiled descriptor. The connector jar + descriptor set are deployment
   artifacts not present in this container, so the function raises a clear
   error until they are provided; the downstream plan (transform/split) is
   identical either way, which is what the tests pin.
+
+Contract: one decoder per wire format. A message the decoder cannot read
+becomes a ``schema_valid = false`` row rather than disappearing, so every
+message lands on the valid side or the dead side of ``transform.hfp_split``
+exactly once (a NULL ``schema_valid`` counts as invalid there).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA

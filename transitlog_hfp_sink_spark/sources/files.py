@@ -1,6 +1,14 @@
 """File sources: batch/streaming readers over parquet/json fixtures, plus
 the driver testdata tables.
 
+HFP contract: one decoder per wire format. JSON files are read as text
+lines and decoded by ``sources.decode.decode_hfp_json`` — the same decoder
+a JSON topic goes through — so a garbage line or a message without
+topic/payload becomes a ``schema_valid = false`` row instead of vanishing.
+Parquet fixtures already hold HFP_RAW_SCHEMA rows. Either way every
+message lands on the valid side or the dead side of ``transform.hfp_split``
+exactly once; a NULL ``schema_valid`` counts as invalid.
+
 The production source in the reference is a Pulsar consumer
 (MessageProcessor.java:102, environment.conf:4-11). On Spark that is a
 one-line swap: ``spark.readStream.format("pulsar")`` (StreamNative
@@ -18,6 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA
+from transitlog_hfp_sink_spark.sources.decode import decode_hfp_json
 
 TABLES = (
     "region",
@@ -111,9 +120,10 @@ def read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 
 def read_hfp_batch(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Batch read of HFP_RAW_SCHEMA-shaped fixtures."""
+    """Batch read of HFP fixtures as HFP_RAW_SCHEMA rows (JSON lines go
+    through decode_hfp_json)."""
     if fmt == "json":
-        return spark.read.schema(HFP_RAW_SCHEMA).json(path)
+        return decode_hfp_json(spark.read.text(path))
     return spark.read.schema(HFP_RAW_SCHEMA).parquet(path)
 
 
@@ -126,7 +136,8 @@ def read_hfp_stream(
 ) -> DataFrame:
     """Streaming read.
 
-    fmt="parquet"/"json": file-drop stream over fixtures (tests/dev).
+    fmt="parquet"/"json": file-drop stream over fixtures (tests/dev);
+      JSON lines go through decode_hfp_json, as in read_hfp_batch.
     fmt="pulsar": StreamNative connector — options should carry
       ``service.url``, ``topic`` (=hfp-data), ``subscriptionName``
       (environment.conf:4-11). Rate limiting via maxEntriesPerTrigger
@@ -135,12 +146,14 @@ def read_hfp_stream(
       maxOffsetsPerTrigger is the rate limit.
     """
     if fmt in ("parquet", "json"):
-        reader = spark.readStream.schema(HFP_RAW_SCHEMA).format(fmt)
+        reader = spark.readStream
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
         for k, v in options.items():
             reader = reader.option(k, v)
-        return reader.load(path_or_topic)
+        if fmt == "json":
+            return decode_hfp_json(reader.format("text").load(path_or_topic))
+        return reader.schema(HFP_RAW_SCHEMA).format(fmt).load(path_or_topic)
     reader = spark.readStream.format(fmt)
     if fmt == "pulsar":
         reader = reader.option("topic", path_or_topic)

@@ -5,10 +5,12 @@ The reference consumes protobuf ``Hfp.Data`` messages from Pulsar
 (MessageProcessor.java:118-119); this engine-pluggable source plays the
 same role for file-framed captures: each ``*.hfpw`` file is a sequence of
 ``[u32 big-endian frame length][Hfp.Data wire bytes]`` records (the
-shape a topic-dump/capture tool would write), decoded with the pure-
-Python wire codec (sources/protowire.py). Undecodable frames surface as
-``schema_valid = false`` rows with NULL structs — the F1 dead-letter
-contract, identical to decode_hfp_wire/decode_hfp_json.
+shape a topic-dump/capture tool would write), decoded frame by frame with
+``protowire.decode_frame`` — the one wire decoder, shared with
+decode_hfp_wire. Undecodable frames surface as ``schema_valid = false``
+rows with NULL structs, so every frame lands on the valid side or the dead
+side of ``transform.hfp_split`` exactly once (a NULL ``schema_valid``
+counts as invalid there).
 
 Usage:
     spark.dataSource.register(HfpDataSource)
@@ -47,6 +49,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql import types as T
 
 from transitlog_hfp_sink_spark.schema import HFP_RAW_SCHEMA
+from transitlog_hfp_sink_spark.sources.protowire import decode_frame
 
 #: HFP_RAW_SCHEMA with nullable topic/payload: undecodable frames surface
 #: as schema_valid=false rows whose structs are NULL (dead-letter rows),
@@ -99,28 +102,6 @@ def _list_files(path: str) -> list[str]:
     )
 
 
-def _decode_rows(frames: Iterator[bytes]):
-    """Frames -> (schema_valid, topic tuple, payload tuple) rows in
-    HFP_RAW_SCHEMA field order."""
-    from transitlog_hfp_sink_spark.sources.protowire import (
-        _P_COLS,
-        _T_COLS,
-        decode_data,
-    )
-
-    for buf in frames:
-        try:
-            t, p = decode_data(bytes(buf))
-        except (ValueError, struct.error, UnicodeDecodeError):
-            yield (False, None, None)
-            continue
-        yield (
-            True,
-            tuple(t[c] for c in _T_COLS),
-            tuple(p[c] for c in _P_COLS),
-        )
-
-
 class _FilePartition(InputPartition):
     def __init__(self, path: str):
         self.path = path
@@ -136,7 +117,7 @@ class HfpWireReader(DataSourceReader):
         return [_FilePartition(p) for p in _list_files(self.path)]
 
     def read(self, partition: _FilePartition):
-        yield from _decode_rows(read_wire_file(partition.path))
+        yield from map(decode_frame, read_wire_file(partition.path))
 
 
 class HfpWireStreamReader(SimpleDataSourceStreamReader):
@@ -192,7 +173,7 @@ class HfpWireStreamReader(SimpleDataSourceStreamReader):
         end = {"last": os.path.basename(batch[-1]) if batch else mark}
         rows = []
         for p in batch:
-            rows.extend(_decode_rows(read_wire_file(p)))
+            rows.extend(map(decode_frame, read_wire_file(p)))
         return iter(rows), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
@@ -202,7 +183,7 @@ class HfpWireStreamReader(SimpleDataSourceStreamReader):
         rows = []
         for p in files:
             if lo < os.path.basename(p) <= hi:
-                rows.extend(_decode_rows(read_wire_file(p)))
+                rows.extend(map(decode_frame, read_wire_file(p)))
         return iter(rows)
 
 

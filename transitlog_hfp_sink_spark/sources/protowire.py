@@ -266,6 +266,17 @@ _T_COLS = [name for _, name, _ in TOPIC_FIELDS]
 _P_COLS = [name for _, name, _ in PAYLOAD_FIELDS]
 
 
+def decode_frame(buf: bytes) -> tuple[bool, tuple | None, tuple | None]:
+    """One wire frame -> (schema_valid, topic, payload) with the structs as
+    tuples in HFP_RAW_SCHEMA field order. An undecodable frame is the dead
+    row (False, None, None). Every wire decoder goes through here."""
+    try:
+        t, p = decode_data(bytes(buf))
+    except (ValueError, struct.error, UnicodeDecodeError):
+        return False, None, None
+    return True, tuple(t[c] for c in _T_COLS), tuple(p[c] for c in _P_COLS)
+
+
 # ---------------------------------------------------------------------------
 # DataFrame surface (mapInPandas both directions)
 # ---------------------------------------------------------------------------
@@ -300,6 +311,8 @@ _DECODED_SCHEMA = ", ".join(
     + [f"t_{f.name} {f.dataType.simpleString()}" for f in HFP_RAW_SCHEMA["topic"].dataType.fields]
     + [f"p_{f.name} {f.dataType.simpleString()}" for f in HFP_RAW_SCHEMA["payload"].dataType.fields]
 )
+_DECODED_COLS = ["schema_valid", *(f"t_{c}" for c in _T_COLS), *(f"p_{c}" for c in _P_COLS)]
+_DEAD_ROW = (False,) + (None,) * (len(_DECODED_COLS) - 1)
 
 
 def decode_hfp_wire(df: DataFrame, value_col: str = "value") -> DataFrame:
@@ -312,19 +325,9 @@ def decode_hfp_wire(df: DataFrame, value_col: str = "value") -> DataFrame:
         for pdf in batches:
             rows = []
             for buf in pdf["value"]:
-                rec = {"schema_valid": False}
-                rec.update({f"t_{c}": None for c in _T_COLS})
-                rec.update({f"p_{c}": None for c in _P_COLS})
-                try:
-                    t, p = decode_data(bytes(buf))
-                except (ValueError, struct.error, UnicodeDecodeError):
-                    rows.append(rec)
-                    continue
-                rec["schema_valid"] = True
-                rec.update({f"t_{c}": t[c] for c in _T_COLS})
-                rec.update({f"p_{c}": p[c] for c in _P_COLS})
-                rows.append(rec)
-            out = pd.DataFrame(rows)
+                ok, t, p = decode_frame(buf)
+                rows.append((ok, *t, *p) if ok else _DEAD_ROW)
+            out = pd.DataFrame(rows, columns=_DECODED_COLS)
             # object dtype keeps ints unmangled (no float64 NaN coercion)
             yield out.astype(object).where(pd.notna(out), None)
 

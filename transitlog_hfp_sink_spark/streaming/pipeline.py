@@ -20,16 +20,21 @@ state bounded by the watermark, which is what makes it viable at 100 TB/day.
 from __future__ import annotations
 
 import logging
+from collections import deque
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
-from transitlog_hfp_sink_spark.transform import hfp_split
+from transitlog_hfp_sink_spark.transform import dedup_vehicles, hfp_split
 
 logger = logging.getLogger(__name__)
+
+#: RateLoggingListener.progress keeps only the newest entries, so a
+#: long-running stream holds a bounded log.
+PROGRESS_LOG_MAXLEN = 1000
 
 
 class RateLoggingListener(StreamingQueryListener):
@@ -38,7 +43,7 @@ class RateLoggingListener(StreamingQueryListener):
     Streaming computes both natively per progress event."""
 
     def __init__(self) -> None:
-        self.progress: list[dict] = []
+        self.progress: deque[dict] = deque(maxlen=PROGRESS_LOG_MAXLEN)
 
     def onQueryStarted(self, event) -> None:  # noqa: N802
         logger.info("query started id=%s", event.id)
@@ -86,15 +91,13 @@ class HfpPipeline:
     # dedup use dropDuplicatesWithinWatermark on the transformed stream
 
     def _foreach_batch(self, raw_df: DataFrame, batch_id: int) -> None:
-        # the valid write + two dead-letter branches would each rescan the
-        # micro-batch source (3x read amplification) — pin it once
+        # the valid write and the dead-letter write would each rescan the
+        # micro-batch source (2x read amplification) — pin it once
         raw_df.persist()
         try:
             valid, dead = hfp_split(raw_df)
             if self.dedup:
-                valid = valid.dropDuplicates(
-                    ["unique_vehicle_id", "tst", "event_type", "journey_type"]
-                )
+                valid = dedup_vehicles(valid)
             self.sink(valid, batch_id)
             if self.dead_letter_path is not None:
                 dead.write.mode("append").parquet(self.dead_letter_path)
@@ -108,27 +111,3 @@ class HfpPipeline:
             .trigger(processingTime=f"{self.trigger_seconds} seconds")
             .start()
         )
-
-
-def run_until_rows(
-    spark: SparkSession,
-    query: StreamingQuery,
-    min_rows: int,
-    timeout_s: float = 120.0,
-) -> None:
-    """Test helper: block until the sink has seen min_rows or timeout."""
-    import time
-
-    t0 = time.time()
-    total = 0
-    while time.time() - t0 < timeout_s:
-        lp = query.lastProgress
-        if lp:
-            total = max(total, lp.get("batchId", 0))
-        if query.exception():
-            raise RuntimeError(query.exception())
-        time.sleep(0.2)
-        recent = query.recentProgress
-        if sum(p.get("numInputRows", 0) for p in recent) >= min_rows:
-            return
-    raise TimeoutError(f"stream did not reach {min_rows} rows in {timeout_s}s")

@@ -12,14 +12,21 @@ Spark columns are natively nullable, so that apparatus is zero code here.
 The safeParseX family (dir/drst/oday/start/journey_start_time) maps to
 try_cast / regexp-guarded expressions: malformed -> NULL, never throw.
 
-Validity split (SURVEY §2.2):
+Validity split (SURVEY §2.2), one rule for every input path:
 - F1 schema filter: messages not declaring protobuf schema HfpData are
   dropped with a warn (MessageProcessor.java:118,125-127) — here routed to
-  a dead-letter DataFrame instead of only logging.
+  a dead-letter DataFrame instead of only logging. A NULL ``schema_valid``
+  counts as invalid.
 - F3 tst invariant: the reference CRASHES the batch on unparseable tst
   (`.get()` on empty Optional, QueueWriter.java:106). A poison message
   killing the pipeline is wrong at scale; the engine filters those rows to
   the dead-letter side and keeps the query alive (documented deviation).
+
+Input comes from one decoder per wire format (sources.decode for JSON,
+sources.protowire for wire frames). Every message lands on the valid side
+or the dead side exactly once:
+``hfp_split`` tags each row with at most one ``reject_reason`` and splits
+on that one column.
 """
 
 from __future__ import annotations
@@ -28,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from transitlog_hfp_sink_spark.functions.timeparse import safe_parse_time
-from transitlog_hfp_sink_spark.schema import VEHICLES_COLUMNS
+from transitlog_hfp_sink_spark.schema import VEHICLES_DEDUP_KEY
 
 # try_* expressions keep null-on-malformed semantics under ANSI mode
 # (Spark 4 defaults spark.sql.ansi.enabled=true, where plain CAST throws).
@@ -100,36 +107,33 @@ def hfp_transform(df: DataFrame) -> DataFrame:
     """F1 schema filter + P1-P40 flatten + F3 tst invariant: the valid side.
 
     The one-call equivalent of the reference's handleMessage + write path
-    for well-formed data. Filters push down to the scan (schema_valid is a
-    top-level column) and the projection prunes the nested struct reads.
+    for well-formed data; the projection prunes the nested struct reads.
     """
     valid, _ = hfp_split(df)
     return valid
 
 
 def hfp_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(valid, dead_letter) pair.
+    """(valid, dead_letter) pair under the one validity rule.
 
-    dead_letter carries the raw row plus a reject_reason so a downstream
-    sink can count/inspect (replacing the reference's warn-log at
-    MessageProcessor.java:125-127 and crash at QueueWriter.java:106).
+    Each row gets at most one reject_reason:
+    - ``invalid_protobuf_schema`` (F1) when schema_valid is false or NULL;
+    - otherwise ``unparseable_tst`` (F3) when payload.tst does not parse.
+
+    valid is the flatten of the rows with no reason. dead_letter carries
+    the reason plus the raw row so a downstream sink can count/inspect
+    (replacing the reference's warn-log at MessageProcessor.java:125-127
+    and crash at QueueWriter.java:106).
     """
-    flat = hfp_flatten(df.where(F.col("schema_valid")))
-    valid = flat.where(F.col("tst").isNotNull())
-
-    bad_schema = df.where(~F.col("schema_valid")).select(
-        F.lit("invalid_protobuf_schema").alias("reject_reason"),
-        F.to_json(F.struct("topic", "payload")).alias("raw"),
+    reason = F.when(
+        ~F.col("schema_valid").eqNullSafe(True), F.lit("invalid_protobuf_schema")
+    ).when(F.try_to_timestamp(F.col("payload.tst")).isNull(), F.lit("unparseable_tst"))
+    tagged = df.withColumn("reject_reason", reason)
+    valid = hfp_flatten(tagged.where(F.col("reject_reason").isNull()))
+    dead = tagged.where(F.col("reject_reason").isNotNull()).select(
+        "reject_reason", F.to_json(F.struct("topic", "payload")).alias("raw")
     )
-    bad_tst = (
-        df.where(F.col("schema_valid"))
-        .where(F.try_to_timestamp(F.col("payload.tst")).isNull())
-        .select(
-            F.lit("unparseable_tst").alias("reject_reason"),
-            F.to_json(F.struct("topic", "payload")).alias("raw"),
-        )
-    )
-    return valid, bad_schema.unionByName(bad_tst)
+    return valid, dead
 
 
 def with_partition_columns(df: DataFrame) -> DataFrame:
@@ -148,12 +152,4 @@ def dedup_vehicles(df: DataFrame) -> DataFrame:
     offers exact dedup on the natural key; in streaming this pairs with a
     watermark to bound state.
     """
-    return df.dropDuplicates(["unique_vehicle_id", "tst", "event_type", "journey_type"])
-
-
-def assert_vehicles_schema(df: DataFrame) -> None:
-    """Cheap structural check: the 40 columns, in DDL order."""
-    if df.columns[: len(VEHICLES_COLUMNS)] != VEHICLES_COLUMNS:
-        raise AssertionError(
-            f"vehicles schema drift: {df.columns} != {VEHICLES_COLUMNS}"
-        )
+    return df.dropDuplicates(list(VEHICLES_DEDUP_KEY))
